@@ -15,9 +15,9 @@ import scala.collection.mutable
   *   - the streaming CHECKPOINT directory
   *
   * — and runs the Spark pipeline in a CHILD JVM
-  * ([[CrashSoakChild]]: socket source → gates → dedup → value +
-  * liveness paths → keyed JDBC upserts, checkpointed, RocksDB state
-  * store). At random instants the supervisor `kill -9`s the child
+  * ([[CrashSoakChild]]: socket source → gates → dedup → per-device
+  * value + liveness reduction → keyed JDBC upserts, checkpointed, RocksDB
+  * state store). At random instants the supervisor `kill -9`s the child
   * (Process.destroyForcibly — no shutdown hooks, no stop(), mid-batch
   * with arbitrary in-flight JDBC transactions) and relaunches it against
   * the SAME checkpoint. The final table must still equal the feed's
@@ -26,7 +26,7 @@ import scala.collection.mutable
   * killed incarnation had half-delivered.
   *
   * Replay accounting (artifact field `replay_accounting`): `delivered`
-  * counts every row entering the value sink across ALL incarnations, so
+  * counts every row entering the ingest query across ALL incarnations, so
   * it exceeds the per-key survivors and can exceed or trail `offered`
   * (= feed.latest()): a kill replays the uncommitted tail (inflation),
   * while the T6 bounded queue DiscardOldest-truncates any backfill gap
@@ -235,7 +235,7 @@ object CrashSoak {
       val exitsJson = childExits
         .map { case (i, c) => s"""{"incarnation":$i,"exit":$c}""" }.mkString("[", ",", "]")
       val json =
-        f"""{"metric":"crash_soak","duration_sec":$durationS,"kills":${killAts.size},"incarnations":${incarnation + 1},"child_exits":$exitsJson,"offered":$offered,"delivered":$delivered,"delivered_vs_offered":${delivered.toDouble / offered}%.3f,"replay_accounting":"delivered sums the value-sink input across all incarnations: a kill -9 replays the killed incarnation's uncommitted tail from the checkpointed offset (inflation over offered), while reconnect backfill older than the T6 queueCapacity (1000 ticks/item) is DiscardOldest-truncated (deflation); final-state exactness is the contract, row counts are diagnostics","final_state_keys":${expected.size},"final_state_mismatches":${mismatches.size},"final_online":$finalOnline,"zero_loss_final_state":${mismatches.isEmpty},"state_store":"rocksdb","pipeline":"${sys.env.getOrElse("SPARK_GRAFT_SOAK_PIPELINE", "split")}","profile":"${sys.env.getOrElse("SPARK_GRAFT_SOAK_PROFILE", "default")}","pass":$pass,"timeline":$tJson}"""
+        f"""{"metric":"crash_soak","duration_sec":$durationS,"kills":${killAts.size},"incarnations":${incarnation + 1},"child_exits":$exitsJson,"offered":$offered,"delivered":$delivered,"delivered_vs_offered":${delivered.toDouble / offered}%.3f,"replay_accounting":"delivered sums the ingest query input across all incarnations: a kill -9 replays the killed incarnation's uncommitted tail from the checkpointed offset (inflation over offered), while reconnect backfill older than the T6 queueCapacity (1000 ticks/item) is DiscardOldest-truncated (deflation); final-state exactness is the contract, row counts are diagnostics","final_state_keys":${expected.size},"final_state_mismatches":${mismatches.size},"final_online":$finalOnline,"zero_loss_final_state":${mismatches.isEmpty},"state_store":"rocksdb","profile":"${sys.env.getOrElse("SPARK_GRAFT_SOAK_PROFILE", "default")}","pass":$pass,"timeline":$tJson}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath), (json + "\n").getBytes)
       println(json)
       if (mismatches.nonEmpty) {
@@ -279,9 +279,7 @@ object CrashSoakChild {
       override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
         e.exception.foreach(m => println(s"[child] QUERY DIED: ${m.take(300)}"))
       override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        // value-path admission: the split mode's value query, or the one
-        // fused query (which subsumes it)
-        if (e.progress.name == "graft-values" || e.progress.name == "graft-fused") {
+        if (e.progress.name == graft.streaming.IngestPipeline.QueryName) {
           val d = delivered.addAndGet(e.progress.numInputRows)
           println(s"[child] delivered=$d")
         }
@@ -295,10 +293,6 @@ object CrashSoakChild {
       .option("chunkRows", 65536L)
       .option("queueCapacity", 1000L)
       .load()
-    // SPARK_GRAFT_SOAK_PIPELINE=fused runs the single-query FusedPipeline
-    // (inherited from the supervisor's environment): exactly-once across
-    // kill -9 must hold in BOTH contracts, not just the split default
-    val pipelineMode = sys.env.getOrElse("SPARK_GRAFT_SOAK_PIPELINE", "split")
     // SPARK_GRAFT_SOAK_PROFILE=fresh soaks the ReferenceFreshness preset
     // (10 s watermark — the r13 supported freshness mode must survive
     // kill -9 exactly like the default, not just pass a latency bench);
@@ -307,14 +301,9 @@ object CrashSoakChild {
     val profileName = sys.env.getOrElse("SPARK_GRAFT_SOAK_PROFILE", "default")
     val profile = graft.streaming.IngestProfile.byName(profileName)
       .copy(trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-    val handle =
-      if (pipelineMode == "fused")
-        graft.streaming.FusedPipeline.start(raw, target, 1.0, 0.0,
-          profile, Some(ckptDir))
-      else
-        graft.streaming.IngestPipeline.start(raw, target, 1.0, 0.0,
-          profile, Some(ckptDir))
-    println(s"[child] incarnation $incarnation ($pipelineMode/$profileName) started (checkpoint $ckptDir)")
+    val handle = graft.streaming.IngestPipeline.start(raw, target, 1.0, 0.0,
+      profile, Some(ckptDir))
+    println(s"[child] incarnation $incarnation ($profileName) started (checkpoint $ckptDir)")
 
     val stopFile = new java.io.File(stopPath)
     while (!stopFile.exists()) Thread.sleep(500)

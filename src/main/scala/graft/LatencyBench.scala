@@ -4,7 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.sources.MeasureSourceProvider
-import graft.streaming.{CurrentValuesSink, FusedPipeline, IngestPipeline}
+import graft.streaming.{CurrentValuesSink, IngestPipeline, IngestProfile}
 
 /** End-to-end ingest LATENCY (r11 verdict #5): every perf artifact so far
   * measures events/second, but the reference's actual contract is
@@ -19,7 +19,7 @@ import graft.streaming.{CurrentValuesSink, FusedPipeline, IngestPipeline}
   *    recoverable from its source_ts (source_ts = start + tick·interval,
   *    sources/MeasureFeed.scala). Visibility is the wall instant the
   *    sink's upsertPartition receives the row. Measured at the sustained
-  *    200k leg and near saturation, split AND fused modes.
+  *    200k leg and near saturation.
   *
   *  - liveness transition: devices go silent mid-run (real wall-clock
   *    MemoryStream feed stamped with real `now`); latency = silence →
@@ -111,7 +111,7 @@ object LatencyBench {
 
   // ---- data-path leg ----
 
-  private def dataPathLeg(mode: String, offered: Long, seconds: Int,
+  private def dataPathLeg(offered: Long, seconds: Int,
                           cpus: String, chunkRows: Long): String = {
     Recorder.reset()
     val spark = session(cpus)
@@ -150,12 +150,10 @@ object LatencyBench {
       override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
       override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == "graft-values" || e.progress.name == "graft-fused")
+        if (e.progress.name == IngestPipeline.QueryName)
           inputRows.addAndGet(e.progress.numInputRows)
     })
-    val handle =
-      if (mode == "fused") FusedPipeline.start(raw, target, trigger = Trigger.ProcessingTime("0 seconds"))
-      else IngestPipeline.start(raw, target, trigger = Trigger.ProcessingTime("0 seconds"))
+    val handle = IngestPipeline.start(raw, target, trigger = Trigger.ProcessingTime("0 seconds"))
     val t0 = System.nanoTime()
     Thread.sleep(seconds * 1000L)
     // freeze the feed, then measure only what was sampled while ticking
@@ -165,8 +163,8 @@ object LatencyBench {
     val eps = inputRows.get() / elapsed
     val v = Recorder.valueLatNs.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted.toIndexedSeq
     val o = Recorder.onlineLatNs.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted.toIndexedSeq
-    System.err.println(f"[latency] $mode offered=$offered eps=$eps%.0f samples=${v.length}")
-    f"""{"mode":"$mode","offered":$offered,"delivered_eps":$eps%.0f,"seconds":$seconds,""" +
+    System.err.println(f"[latency] offered=$offered eps=$eps%.0f samples=${v.length}")
+    f"""{"offered":$offered,"delivered_eps":$eps%.0f,"seconds":$seconds,""" +
       f""""value_samples":${v.length},"value_p50_ms":${pct(v, 0.50)}%.1f,""" +
       f""""value_p95_ms":${pct(v, 0.95)}%.1f,"value_p99_ms":${pct(v, 0.99)}%.1f,""" +
       f""""online_samples":${o.length},"online_p50_ms":${pct(o, 0.50)}%.1f,""" +
@@ -178,8 +176,8 @@ object LatencyBench {
   /** Real-wall-clock scenario: 30 devices at ~2 events/s each, 10 go
     * silent after `warmSec`; measure silence → online=0 visibility.
     * `delay` is the pipeline watermark (default contract "60 seconds";
-    * the tightened leg shows the knob). Runs the liveness path exactly as
-    * the pipeline wires it (gated → FMGWS → livenessWriter sink).
+    * the tightened leg shows the knob). Runs through [[IngestPipeline.start]],
+    * the path that ships.
     */
   private def livenessLeg(delay: String, timeoutBudgetSec: Int): String = {
     Recorder.reset()
@@ -189,9 +187,9 @@ object LatencyBench {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[graft.streaming.MeasureEvent]
     val target = new RecordingTarget
-    val g = IngestPipeline.gated(input.toDF(), watermarkDelay = delay)
-    val q = IngestPipeline.livenessWriter(g, target,
-      Trigger.ProcessingTime("1 second"), None).start()
+    val handle = IngestPipeline.start(input.toDF(), target, 1.0, 0.0,
+      IngestProfile.Default.copy(watermarkDelay = delay,
+        trigger = Trigger.ProcessingTime("1 second")), None)
     val silent = (0 until 10).map(i => f"L-dev-$i%02d")
     val active = (10 until 30).map(i => f"L-dev-$i%02d")
     @volatile var pumping = true
@@ -219,7 +217,7 @@ object LatencyBench {
     while (Recorder.offlineSeen.size < silent.size && System.nanoTime() < deadline)
       Thread.sleep(500)
     pumping = false
-    q.stop(); target.close(); spark.stop()
+    handle.stop(); target.close(); spark.stop()
     import scala.jdk.CollectionConverters._
     val lats = Recorder.offlineSeen.asScala.toSeq.map { case (d, seen) =>
       (seen - Recorder.silencedAt.get(d)) / 1e9
@@ -239,11 +237,9 @@ object LatencyBench {
     val mode = sys.env.getOrElse("SPARK_GRAFT_LAT_MODE", "all")
     val legs = scala.collection.mutable.ArrayBuffer.empty[String]
     if (mode == "all" || mode == "data") {
-      legs += dataPathLeg("split", 200000L, seconds, cpus, 65536L)
-      legs += dataPathLeg("fused", 200000L, seconds, cpus, 65536L)
-      // ~90% of each mode's measured saturation (THROUGHPUT_r12)
-      legs += dataPathLeg("split", 500000L, seconds, cpus, 262144L)
-      legs += dataPathLeg("fused", 600000L, seconds, cpus, 262144L)
+      legs += dataPathLeg(200000L, seconds, cpus, 65536L)
+      // ~90% of the measured saturation (THROUGHPUT_r12)
+      legs += dataPathLeg(600000L, seconds, cpus, 262144L)
     }
     val liveness = scala.collection.mutable.ArrayBuffer.empty[String]
     if (mode == "all" || mode == "liveness") {

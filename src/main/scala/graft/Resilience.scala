@@ -30,10 +30,10 @@ import scala.jdk.OptionConverters._
   * scenario re-arms with a smaller delay fraction until the kill is
   * observed in flight (bounded attempts, attempt count in the artifact).
   *
-  * Streaming: the ClusterParity pipeline scenario (gates → dedup → scale
-  * → liveness FMGWS → executor-side keyed JDBC upsert into ephemeral
-  * Postgres over TCP), volume-widened so the kill lands inside an active
-  * micro-batch, with a reliable checkpoint dir. Exactly-once at the sink
+  * Streaming: the ClusterParity pipeline scenario (gates → dedup → one
+  * value + liveness FMGWS → scale → executor-side keyed JDBC upsert into
+  * ephemeral Postgres over TCP), volume-widened so the kill lands inside
+  * an active micro-batch, with a reliable checkpoint dir. Exactly-once at the sink
   * must hold THROUGH the executor death: the final modvalues table must
   * be row-identical to the undisturbed run's.
   *

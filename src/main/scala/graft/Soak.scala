@@ -22,7 +22,7 @@ import graft.streaming.{ConfigReload, CurrentValuesSink, IngestPipeline, JdbcUps
   *       `Services/OpcSubscribeService.cs:79-98,419-424`)
   *     → framed-socket OPC UA ingest ([[FeedTransport.FeedServer]], one
   *       server per configured connection, union of DSv2 socket sources)
-  *     → gates → watermark dedup → value path + liveness state machine
+  *     → gates → watermark dedup → per-device value + liveness reduction
   *     → live embedded Derby via the production [[JdbcUpsert.Target]]
   *       (AnsiMerge dialect), plus the heartbeat and server-watchdog
   *       queries —
@@ -239,7 +239,7 @@ object Soak {
         e.exception.foreach(msg =>
           println(s"[soak] QUERY DIED: ${e.runId} -> ${msg.take(400)}"))
       override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == "graft-values") delivered.addAndGet(e.progress.numInputRows)
+        if (e.progress.name == IngestPipeline.QueryName) delivered.addAndGet(e.progress.numInputRows)
     })
     val relaunches = new AtomicInteger(-1) // first launch is not a RE-launch
     val silenceEvents = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -2,9 +2,6 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.operators.CurrentValues
 
 /** K2 — the keyed current-value upsert (reference
@@ -15,12 +12,12 @@ import graft.operators.CurrentValues
   * construction (SURVEY.md §4).
   *
   * The write path is PARTITION-level: after the distributed per-key
-  * reduction, each partition of final rows is applied executor-side via
-  * `foreachPartition` — row data never funnels through the driver, so the
-  * sink scales with executors (at 100 TB / millions of keys a driver-side
-  * collect would be the bottleneck and an OOM risk). Keys are disjoint
-  * across partitions (the reduction shuffles by key), so concurrent
-  * partition writers never contend on a row.
+  * reduction ([[IngestPipeline]]), each partition of final rows is applied
+  * executor-side via `foreachPartition` — row data never funnels through
+  * the driver, so the sink scales with executors (at 100 TB / millions of
+  * keys a driver-side collect would be the bottleneck and an OOM risk).
+  * Keys are disjoint across partitions (the reduction is keyed by device),
+  * so concurrent partition writers never contend on a row.
   *
   * Control-plane operations (seed / offline reset / heartbeat) are
   * SET-ORIENTED statements on the target — the reference's own
@@ -117,87 +114,6 @@ object CurrentValuesSink {
     private[CurrentValuesSink] val tables =
       new ConcurrentHashMap[String, ConcurrentHashMap[(String, String), ModRow]]()
   }
-
-  /** Reduce one micro-batch to its final per-key rows (last writer wins
-    * WITHIN the batch too — the reference applies values in dequeue order,
-    * so only the newest survives) and apply them partition-by-partition on
-    * the executors. Same-timestamp ties break on the source's dequeue
-    * sequence (`event_seq`, emitted by the DSv2 source) so the outcome is
-    * deterministic and matches arrival order; a synthetic id is only the
-    * fallback for sources that carry no sequence.
-    */
-  def applyBatch(batch: DataFrame, target: UpsertTarget, scaleSlope: Double,
-                 scaleOffset: Double): Unit =
-    applyBatchWith(batch, target,
-      graft.functions.ScalarOps.scaleSlopeIntercept(col("raw_value"), scaleSlope, scaleOffset))
-
-  /** Per-POINT auto-scaling, the reference's actual semantics
-    * (`Services/OpcSubscribeService.cs:565-576`: each monitored point
-    * scales by its template's scale_mode + parameters). `scaling` is the
-    * config dim with columns (device|daq_name, measure_name, scale_mode,
-    * slope, offset, value_min, value_max, target_min, target_max) —
-    * `ConfigFiles.devicePoints(...)` output works as-is. It joins in
-    * AFTER the per-key reduction (one row per key, not per event), so
-    * the config columns never widen the reduction shuffle; points with
-    * no config row fall back to the identity scale.
-    */
-  def applyBatchScaled(batch: DataFrame, target: UpsertTarget,
-                       scaling: DataFrame): Unit = {
-    val named =
-      if (scaling.columns.contains("device")) scaling
-      else scaling.withColumnRenamed("daq_name", "device")
-    val dim = named.select("device", "measure_name", "scale_mode",
-      "slope", "offset", "value_min", "value_max", "target_min", "target_max")
-    applyBatchWith(batch, target,
-      graft.functions.ScalarOps.scaleByMode(col("raw_value"), col("scale_mode"),
-        col("slope"), col("offset"), col("value_min"), col("value_max"),
-        col("target_min"), col("target_max")),
-      latest => latest.join(broadcast(dim), Seq("device", "measure_name"), "left_outer"))
-  }
-
-  private def applyBatchWith(batch: DataFrame, target: UpsertTarget,
-                             measureValue: org.apache.spark.sql.Column,
-                             enrich: DataFrame => DataFrame = identity): Unit = {
-    import batch.sparkSession.implicits._
-    if (batch.isEmpty) return
-    val withId =
-      if (batch.columns.contains("event_seq"))
-        batch.withColumn("event_id", col("event_seq"))
-      else batch.withColumn("event_id", monotonically_increasing_id())
-    val latest = enrich(CurrentValues.lastValuePerKey(withId))
-      .withColumn("tag_value", bround(col("raw_value"), 3))
-      .withColumn("measure_value", measureValue)
-      .withColumn("last_updated",
-        graft.functions.ScalarOps.lastUpdatedString(col("source_ts")))
-      .select("device", "measure_name", "tag_value", "measure_value", "last_updated")
-      .as[ModRow]
-    latest.foreachPartition((rows: Iterator[ModRow]) => target.upsertPartition(rows))
-  }
-
-  /** Wire a gated measure stream into the sink via foreachBatch, 5 s
-    * trigger (reference main-loop tick, `Services/OpcSubscribeService.cs:392`).
-    */
-  def writer(gated: DataFrame, target: UpsertTarget,
-             slope: Double = 1.0, offset: Double = 0.0,
-             trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
-    gated.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, target, slope, offset)
-      }
-
-  /** Production writer: per-point scaling from the config dim (see
-    * [[applyBatchScaled]]), the full reference semantics.
-    */
-  def writerScaled(gated: DataFrame, target: UpsertTarget, scaling: DataFrame,
-                   trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
-    gated.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatchScaled(batch, target, scaling)
-      }
 
   /** K1 seed + K3 startup reset (`Services/OpcSubscribeService.cs:656-713,
     * 717-739`): seed zero rows for unseen keys + one myPV_online row per

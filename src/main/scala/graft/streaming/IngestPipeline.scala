@@ -1,29 +1,35 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.sql.Timestamp
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.functions.ScalarOps
 import graft.operators.{CurrentValues, Gates}
 import graft.sources.MeasureSourceProvider
-import graft.streaming.CurrentValuesSink.UpsertTarget
+import graft.streaming.CurrentValuesSink.{ModRow, UpsertTarget}
 
-/** The reference's full data path (SURVEY.md §3.1) wired end-to-end in
-  * Structured Streaming:
+/** The reference's full data path (SURVEY.md §3.1) as ONE Structured
+  * Streaming query:
   *
   * {{{
-  * source (DataSource V2)            S1/T6
+  * source (DataSource V2)                            S1/T6
   *   → measure exclusion (F3)
-  *   → watermark + dedup   (T8)
-  *   → quality gate (F1) split:
-  *       good  → scale (C1) → current-value upsert (K2)
-  *       state → liveness machine (T2) → online-flag upsert
+  *   → watermark + dedup                             (T8)
+  *   → flatMapGroupsWithState keyed by device:
+  *       all events → liveness machine (T2)          → the device's online row
+  *       good only (F1) → last value per measure     → one value row per key
+  *   → scale (C1) → keyed upsert (K2), one pass per micro-batch
   * }}}
   *
-  * Two queries share the one source stream: the value path and the
-  * liveness path (the reference likewise writes value rows and
-  * myPV_online rows independently — `Services/OpcSubscribeService.cs:578-585`).
-  * Both land in the same keyed UpsertTarget, so the result is exactly the
-  * reference's `modvalues` table.
+  * The reference writes value rows and myPV_online rows from one
+  * subscription loop (`Services/OpcSubscribeService.cs:578-585`), and so
+  * does this query: one source admission, one dedup state, one
+  * device-keyed shuffle, one state store and one sink pass per trigger.
+  * The streaming last-writer-wins rule on (source_ts, event_seq) lives in
+  * the in-group reduction ([[update]]); liveness is [[Liveness.update]]
+  * itself. Both row kinds land in the same keyed UpsertTarget, so the
+  * result is exactly the reference's `modvalues` table.
   *
   * The staleness gate (F2) is enforced by the watermark: rows older than
   * the delay are dropped by `dropDuplicatesWithinWatermark`'s state
@@ -32,6 +38,9 @@ import graft.streaming.CurrentValuesSink.UpsertTarget
   */
 object IngestPipeline {
 
+  /** The name of the ingest query; progress listeners key on it. */
+  val QueryName = "graft-ingest"
+
   /** Driver-side twin of ScalarOps.lastUpdatedString (C4 µs format, UTC). */
   private def formatTs(ts: java.sql.Timestamp): String =
     java.time.format.DateTimeFormatter
@@ -39,18 +48,78 @@ object IngestPipeline {
       .withZone(java.time.ZoneOffset.UTC)
       .format(ts.toInstant)
 
-  final case class Handle(valueQuery: StreamingQuery, livenessQuery: StreamingQuery) {
-    def stop(): Unit = { valueQuery.stop(); livenessQuery.stop() }
-    def processAllAvailable(): Unit = {
-      valueQuery.processAllAvailable(); livenessQuery.processAllAvailable()
-    }
+  /** The running ingest query. It writes both row kinds, so `valueQuery`
+    * and `livenessQuery` are the same query.
+    */
+  final case class Handle(query: StreamingQuery) {
+    def valueQuery: StreamingQuery = query
+    def livenessQuery: StreamingQuery = query
+    def stop(): Unit = query.stop()
+    def processAllAvailable(): Unit = query.processAllAvailable()
   }
 
-  /** Gates + dedup shared by both paths. */
+  /** Gated event + the source's dequeue sequence (the within-batch
+    * last-writer-wins tiebreak).
+    */
+  final case class SeqEvent(
+      device: String,
+      measure_name: String,
+      raw_value: Double,
+      source_ts: Timestamp,
+      status_ok: Boolean,
+      event_seq: Long)
+
+  /** One final row per `modvalues` key for a micro-batch: a measure's last
+    * good value, or — under [[CurrentValues.OnlineMeasure]], which F3 keeps
+    * out of the input — the device's online flag as `raw_value`.
+    */
+  final case class LatestRow(
+      device: String,
+      measure_name: String,
+      raw_value: Double,
+      event_ts: Timestamp)
+
+  /** Exclusion gate + watermark dedup: the front end of the query. */
   def gated(raw: DataFrame, watermarkDelay: String = "60 seconds"): DataFrame =
     MeasureStream.watermarkDedup(Gates.excludeOnlineMeasure(raw), watermarkDelay)
 
-  /** Start the two sink queries over an already-open measure stream.
+  private def update(
+      device: String,
+      events: Iterator[SeqEvent],
+      state: GroupState[Liveness.DeviceState]): Iterator[LatestRow] = {
+    val evs = events.toSeq
+    // on timeout `evs` is empty: only the liveness machine emits
+    val online = Liveness.update(device,
+      evs.iterator.map(e =>
+        MeasureEvent(e.device, e.measure_name, e.raw_value, e.source_ts, e.status_ok)),
+      state
+    ).map(o => LatestRow(device, CurrentValues.OnlineMeasure, o.online, o.event_ts))
+    // F1 per event, then last-writer-wins per measure on (source_ts, event_seq)
+    val values = evs.filter(_.status_ok)
+      .groupBy(_.measure_name).valuesIterator.map { g =>
+        val last = g.maxBy(e => (e.source_ts.getTime, e.source_ts.getNanos, e.event_seq))
+        LatestRow(device, last.measure_name, last.raw_value, last.source_ts)
+      }
+    values ++ online
+  }
+
+  /** Upsert one micro-batch with ONE action: every further action on the
+    * batch (an `isEmpty`, a second write) re-runs the stateful plan. Rows
+    * are already one per key and a device's keys share its partition, so
+    * each partition goes to the target as it is.
+    */
+  private def upsert(batch: DataFrame, target: UpsertTarget, measureValue: Column): Unit = {
+    import batch.sparkSession.implicits._
+    val online = col("measure_name") === CurrentValues.OnlineMeasure
+    batch.select(col("device"), col("measure_name"),
+        bround(col("raw_value"), 3).as("tag_value"),
+        when(online, col("raw_value")).otherwise(measureValue).as("measure_value"),
+        ScalarOps.lastUpdatedString(col("event_ts")).as("last_updated"))
+      .as[ModRow]
+      .foreachPartition((rows: Iterator[ModRow]) => target.upsertPartition(rows))
+  }
+
+  /** Start the ingest query over an already-open measure stream.
     * `checkpointDir` is REQUIRED in production: with it, a restart resumes
     * from the committed epoch and the idempotent keyed upsert makes the
     * replay exactly-once (SURVEY.md §7.4); without it (tests/demos) Spark
@@ -63,76 +132,68 @@ object IngestPipeline {
     start(raw, target, slope, offset,
       IngestProfile.Default.copy(trigger = trigger), checkpointDir)
 
-  /** [[start]] under a NAMED freshness profile (r12 verdict #8): the
-    * watermark and trigger travel together — see [[IngestProfile]] for
-    * the dedup-horizon vs liveness-freshness trade each preset takes.
+  /** [[start]] under a NAMED freshness profile: the watermark and trigger
+    * travel together — see [[IngestProfile]] for the dedup-horizon vs
+    * liveness-freshness trade each preset takes.
     */
   def start(raw: DataFrame, target: UpsertTarget,
             slope: Double, offset: Double,
             profile: IngestProfile,
-            checkpointDir: Option[String]): Handle = {
-    val trigger = profile.trigger
-    val g = gated(raw, profile.watermarkDelay)
+            checkpointDir: Option[String]): Handle =
+    run(raw, target, profile, checkpointDir,
+      ScalarOps.scaleSlopeIntercept(col("raw_value"), slope, offset), identity)
 
-    // value path: only good values reach the table (F1)
-    val valueWriter = CurrentValuesSink
-      .writer(Gates.qualityGate(g), target, slope, offset, trigger)
-      .queryName("graft-values")
-    val valueQuery = checkpointDir
-      .map(d => valueWriter.option("checkpointLocation", s"$d/values"))
-      .getOrElse(valueWriter).start()
-
-    val livenessQuery = livenessWriter(g, target, trigger, checkpointDir).start()
-    Handle(valueQuery, livenessQuery)
-  }
-
-  /** The liveness path shared by [[start]] and [[startScaled]]: ALL events
-    * feed the state machine (bad status and silence both drive the flag to
-    * 0). The per-device reduction and the writes stay distributed — no
-    * driver collect on the event path.
-    */
-  private[graft] def livenessWriter(g: DataFrame, target: UpsertTarget, trigger: Trigger,
-                                    checkpointDir: Option[String]) = {
-    val writer = Liveness.onlineEvents(MeasureStream.typed(g), watermarked = true)
-      .writeStream.outputMode("append").trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Liveness.OnlineEvent], _: Long) =>
-        import batch.sparkSession.implicits._
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("device").orderBy(col("event_ts").desc)
-        val rows = batch.toDF()
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("device"),
-            lit(CurrentValues.OnlineMeasure).as("measure_name"),
-            col("online").as("tag_value"),
-            col("online").as("measure_value"),
-            graft.functions.ScalarOps.lastUpdatedString(col("event_ts")).as("last_updated"))
-          .as[CurrentValuesSink.ModRow]
-        rows.foreachPartition(
-          (it: Iterator[CurrentValuesSink.ModRow]) => target.upsertPartition(it))
-      }
-      .queryName("graft-liveness")
-    checkpointDir
-      .map(d => writer.option("checkpointLocation", s"$d/liveness"))
-      .getOrElse(writer)
-  }
-
-  /** [[start]] with per-POINT auto-scaling from the config dim (the
-    * reference's actual semantics — each monitored point scales by its
-    * template's scale_mode): the value path goes through
-    * [[CurrentValuesSink.writerScaled]], everything else is identical.
+  /** [[start]] with per-POINT auto-scaling, the reference's actual
+    * semantics (`Services/OpcSubscribeService.cs:565-576`: each monitored
+    * point scales by its template's scale_mode + parameters). `scaling` is
+    * the config dim with columns (device|daq_name, measure_name,
+    * scale_mode, slope, offset, value_min, value_max, target_min,
+    * target_max) — `ConfigFiles.devicePoints(...)` output works as-is. It
+    * is broadcast-joined AFTER the in-group reduction (one row per key,
+    * not per event); a point with no config row keeps the identity scale.
     */
   def startScaled(raw: DataFrame, target: UpsertTarget, scaling: DataFrame,
                   trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
                   checkpointDir: Option[String] = None): Handle = {
-    val g = gated(raw)
-    val valueWriter = CurrentValuesSink
-      .writerScaled(Gates.qualityGate(g), target, scaling, trigger)
-      .queryName("graft-values")
-    val valueQuery = checkpointDir
-      .map(d => valueWriter.option("checkpointLocation", s"$d/values"))
-      .getOrElse(valueWriter).start()
-    val livenessQuery = livenessWriter(g, target, trigger, checkpointDir).start()
-    Handle(valueQuery, livenessQuery)
+    val named =
+      if (scaling.columns.contains("device")) scaling
+      else scaling.withColumnRenamed("daq_name", "device")
+    val dim = broadcast(named.select("device", "measure_name", "scale_mode",
+      "slope", "offset", "value_min", "value_max", "target_min", "target_max"))
+    run(raw, target, IngestProfile.Default.copy(trigger = trigger), checkpointDir,
+      ScalarOps.scaleByMode(col("raw_value"), col("scale_mode"),
+        col("slope"), col("offset"), col("value_min"), col("value_max"),
+        col("target_min"), col("target_max")),
+      _.join(dim, Seq("device", "measure_name"), "left_outer"))
+  }
+
+  private def run(raw: DataFrame, target: UpsertTarget, profile: IngestProfile,
+                  checkpointDir: Option[String], measureValue: Column,
+                  enrich: DataFrame => DataFrame): Handle = {
+    val g = gated(raw, profile.watermarkDelay)
+    import g.sparkSession.implicits._
+    // the DSv2 source carries event_seq (true dequeue order); a source
+    // without one gets a constant — monotonically_increasing_id is
+    // disallowed in a streaming plan — so its same-timestamp ties with
+    // different payloads resolve arbitrarily
+    val withSeq =
+      if (g.columns.contains("event_seq")) g
+      else g.withColumn("event_seq", lit(0L))
+    val latest = withSeq
+      .select("device", "measure_name", "raw_value", "source_ts", "status_ok", "event_seq")
+      .as[SeqEvent]
+      .groupByKey(_.device)
+      .flatMapGroupsWithState[Liveness.DeviceState, LatestRow](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+    val writer = latest.writeStream
+      .outputMode("append").trigger(profile.trigger)
+      .foreachBatch { (batch: Dataset[LatestRow], _: Long) =>
+        upsert(enrich(batch.toDF()), target, measureValue)
+      }
+      .queryName(QueryName)
+    Handle(checkpointDir
+      .map(d => writer.option("checkpointLocation", s"$d/ingest"))
+      .getOrElse(writer).start())
   }
 
   /** K4/T1 — the heartbeat as its own triggered query (reference: every
@@ -186,9 +247,9 @@ object IngestPipeline {
             lit(0.0).as("tag_value"),
             lit(0.0).as("measure_value"),
             graft.functions.ScalarOps.lastUpdatedString(col("silent_since")).as("last_updated"))
-          .as[CurrentValuesSink.ModRow]
+          .as[ModRow]
         rows.foreachPartition(
-          (it: Iterator[CurrentValuesSink.ModRow]) => target.upsertPartition(it))
+          (it: Iterator[ModRow]) => target.upsertPartition(it))
       }
       .queryName("graft-watchdog").start()
 

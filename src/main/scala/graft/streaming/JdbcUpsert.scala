@@ -138,7 +138,7 @@ object JdbcUpsert {
   }
 
   /** UpsertTarget over a JDBC connection factory. One connection and
-    * transaction per partition (value path) or per control-plane call;
+    * transaction per partition (ingest batch) or per control-plane call;
     * prepared-statement batches chunked at `batchSize` to bound executor
     * memory regardless of partition size.
     */

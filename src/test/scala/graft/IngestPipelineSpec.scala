@@ -1,13 +1,15 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.CurrentValues
 import graft.streaming._
 import graft.streaming.CurrentValuesSink.InMemoryTarget
 
-/** End-to-end data path (SURVEY.md §3.1): source → gates → dedup → split
-  * value/liveness paths → keyed upserts into one modvalues-shaped target.
+/** End-to-end data path (SURVEY.md §3.1): source → gates → dedup → one
+  * per-device value + liveness reduction → keyed upserts into one
+  * modvalues-shaped target.
   */
 class IngestPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -92,6 +94,62 @@ class IngestPipelineSpec extends SparkSpec {
       assert(byMeasure("temp") == 9.0)   // C1 per-point: 4*2 + 1
       assert(byMeasure("pct") == 25.0)   // C2 per-point: 10x range remap
     } finally { handle.stop(); target.close() }
+  }
+
+  test("the stateful plan runs once per micro-batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[MeasureEvent]
+    val target = new InMemoryTarget
+    // Spark jobs per (query id, batch id); a trailing marker job proves the
+    // listener bus has delivered every job posted before it
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p != null && p.getProperty("graft.test.marker") != null) markerSeen = true
+        else for {
+          q <- Option(p).flatMap(x => Option(x.getProperty("sql.streaming.queryId")))
+          b <- Option(p.getProperty("streaming.sql.batchId"))
+        } jobs.merge((q, b), 1, _ + _)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val handle = IngestPipeline.start(input.toDF(), target, slope = 2.0, offset = 1.0,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
+    try {
+      val batches = Seq(
+        Seq("d1", "d2", "d3"),
+        Seq("d1", "d4"),
+        Seq("d2", "d3", "d4", "d5"))
+      batches.zipWithIndex.foreach { case (devices, i) =>
+        input.addData(devices.flatMap(d => Seq(
+          MeasureEvent(d, "temp", i.toDouble, ts(f"2024-01-01 00:00:${i + 1}%02d"), status_ok = true),
+          MeasureEvent(d, "rpm", i.toDouble, ts(f"2024-01-01 00:00:${i + 1}%02d"), status_ok = true))): _*)
+        handle.processAllAvailable()
+      }
+      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(markerSeen)
+
+      val id = handle.query.id.toString
+      val perBatch = jobs.asScala.collect { case ((q, b), n) if q == id => b.toLong -> n }.toMap
+      val progress = handle.query.recentProgress
+      assert(progress.nonEmpty && progress.forall(p => perBatch.contains(p.batchId)))
+      assert(perBatch.values.forall(_ == 1), s"jobs per batch: $perBatch")
+      // the state store saw each device exactly once per data batch
+      val updated = progress.filter(_.numInputRows > 0).map { p =>
+        p.stateOperators.find(_.operatorName == "flatMapGroupsWithState").get.numRowsUpdated
+      }.toSeq
+      assert(updated == batches.map(_.size.toLong))
+      assert(target.snapshot.size == 5 * 3) // 5 devices × (2 measures + online)
+    } finally {
+      handle.stop(); target.close()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("heartbeat query bumps last_updated only for online devices (K4/T1)") {

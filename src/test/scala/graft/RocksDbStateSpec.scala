@@ -25,22 +25,7 @@ import graft.streaming.StreamingDedup.DocEvent
 class RocksDbStateSpec extends SparkSpec {
   import spark.implicits._
 
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
   private def ts(s: String) = Timestamp.valueOf(s)
-
-  private def withProvider[T](provider: Option[String])(body: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    provider.foreach(spark.conf.set(ProviderKey, _))
-    if (provider.isEmpty) spark.conf.unset(ProviderKey)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(ProviderKey, p)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
 
   /** The StreamingDedupSpec scenario, parameterized by provider; returns
     * (emitted survivor rows, state rows after batch 2, rocksdb metric
@@ -49,7 +34,7 @@ class RocksDbStateSpec extends SparkSpec {
   private def runScenario(provider: Option[String], name: String)
       : (Set[(Long, String, Long)], Long, Set[String]) = {
     implicit val sqlCtx = spark.sqlContext
-    withProvider(provider) {
+    withStateStore(provider) {
       val input = MemoryStream[DocEvent]
       val out = StreamingDedup.firstSeen(input.toDS().toDF())
       val query = out.writeStream.format("memory").queryName(name)
@@ -84,7 +69,7 @@ class RocksDbStateSpec extends SparkSpec {
 
   test("first-seen dedup under RocksDBStateStoreProvider: results identical to in-memory provider, RocksDB genuinely engaged") {
     val (memRows, memState, _) = runScenario(None, "rocks_mem_t")
-    val (rocksRows, rocksState, rocksMetrics) = runScenario(Some(RocksDb), "rocks_db_t")
+    val (rocksRows, rocksState, rocksMetrics) = runScenario(Some(SparkSpec.RocksDbProvider), "rocks_db_t")
     // parity: emitted survivors AND retained state count match exactly
     assert(rocksRows == memRows)
     assert(rocksRows == Set((7L, "fpA", 1L), (20L, "fpB", 0L), (40L, "fpC", 0L)))
@@ -98,7 +83,7 @@ class RocksDbStateSpec extends SparkSpec {
 
   test("TTL eviction under RocksDB: state row count drops when the seen-state horizon passes") {
     implicit val sqlCtx = spark.sqlContext
-    withProvider(Some(RocksDb)) {
+    withStateStore(Some(SparkSpec.RocksDbProvider)) {
       val input = MemoryStream[DocEvent]
       val out = StreamingDedup.firstSeen(input.toDS().toDF(),
         delay = "0 seconds", ttlMillis = 10000L)

@@ -16,10 +16,8 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def runBatches[T](q: org.apache.spark.sql.streaming.DataStreamWriter[T]): Unit = {
-    val query = q.start()
-    try query.processAllAvailable() finally query.stop()
-  }
+  private def valueRows(target: InMemoryTarget): Seq[ModRow] =
+    target.snapshot.filter(_.measure_name != graft.operators.CurrentValues.OnlineMeasure)
 
   test("liveness: good→1, bad→0, 60s event-time silence→0 (T2)") {
     implicit val sqlCtx = spark.sqlContext
@@ -96,76 +94,77 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[MeasureEvent]
     val target = new InMemoryTarget
-    val w = CurrentValuesSink.writer(input.toDF(), target, slope = 2.0, offset = 0.0,
-      trigger = Trigger.AvailableNow())
-    input.addData(
-      MeasureEvent("d1", "temp", 1.0, ts("2024-01-01 00:00:01"), status_ok = true),
-      MeasureEvent("d1", "temp", 5.0, ts("2024-01-01 00:00:09"), status_ok = true))
-    runBatches(w)
-    val afterB1 = target.snapshot
-    assert(afterB1.size == 1)
-    assert(afterB1.head == ModRow("d1", "temp", 5.0, 10.0, "2024-01-01T00:00:09.000000"))
+    val handle = IngestPipeline.start(input.toDF(), target, slope = 2.0, offset = 0.0,
+      trigger = Trigger.ProcessingTime("0 seconds"))
+    try {
+      input.addData(
+        MeasureEvent("d1", "temp", 1.0, ts("2024-01-01 00:00:01"), status_ok = true),
+        MeasureEvent("d1", "temp", 5.0, ts("2024-01-01 00:00:09"), status_ok = true))
+      handle.processAllAvailable()
+      val afterB1 = valueRows(target)
+      assert(afterB1 == Seq(ModRow("d1", "temp", 5.0, 10.0, "2024-01-01T00:00:09.000000")))
 
-    // replaying the same rows (epoch replay) must not change the table
-    CurrentValuesSink.applyBatch(
-      Seq(("d1", "temp", 5.0, ts("2024-01-01 00:00:09"), true))
-        .toDF("device", "measure_name", "raw_value", "source_ts", "status_ok"),
-      target, 2.0, 0.0)
-    assert(target.snapshot == afterB1)
+      // replaying the same event (epoch replay) must not change the table
+      input.addData(MeasureEvent("d1", "temp", 5.0, ts("2024-01-01 00:00:09"), status_ok = true))
+      handle.processAllAvailable()
+      assert(valueRows(target) == afterB1)
 
-    // an older row arriving later still overwrites (last-WRITER-wins,
-    // matching the reference's unconditional UPDATE)
-    CurrentValuesSink.applyBatch(
-      Seq(("d1", "temp", 3.0, ts("2024-01-01 00:00:05"), true))
-        .toDF("device", "measure_name", "raw_value", "source_ts", "status_ok"),
-      target, 2.0, 0.0)
-    assert(target.snapshot.head.tag_value == 3.0)
+      // an older row arriving later still overwrites (last-WRITER-wins,
+      // matching the reference's unconditional UPDATE)
+      input.addData(MeasureEvent("d1", "temp", 3.0, ts("2024-01-01 00:00:05"), status_ok = true))
+      handle.processAllAvailable()
+      assert(valueRows(target) == Seq(ModRow("d1", "temp", 3.0, 6.0, "2024-01-01T00:00:05.000000")))
+    } finally { handle.stop(); target.close() }
   }
 
   test("within-batch LWW tie on source_ts resolves by source sequence, deterministically") {
+    implicit val sqlCtx = spark.sqlContext
     val t = ts("2024-01-01 00:00:05")
-    // two same-timestamp values for one key spread across partitions: the
-    // higher dequeue sequence must win regardless of partition layout
-    val batch = Seq(
-      ("d1", "temp", 1.0, t, true, 10L),
-      ("d1", "temp", 2.0, t, true, 11L))
-      .toDF("device", "measure_name", "raw_value", "source_ts", "status_ok", "event_seq")
-      .repartition(2)
-    (1 to 3).foreach { _ =>
+    val lo = IngestPipeline.SeqEvent("d1", "temp", 1.0, t, status_ok = true, event_seq = 10L)
+    val hi = IngestPipeline.SeqEvent("d1", "temp", 2.0, t, status_ok = true, event_seq = 11L)
+    // two same-timestamp values for one key, one per source partition, in
+    // either order: the higher dequeue sequence must win
+    Seq(Seq(lo, hi), Seq(hi, lo)).foreach { rows =>
+      val input = MemoryStream[IngestPipeline.SeqEvent](2)
       val target = new InMemoryTarget
+      val handle = IngestPipeline.start(input.toDF(), target,
+        trigger = Trigger.ProcessingTime("0 seconds"))
       try {
-        CurrentValuesSink.applyBatch(batch, target, 1.0, 0.0)
-        assert(target.snapshot == Seq(ModRow("d1", "temp", 2.0, 2.0,
+        input.addData(rows)
+        handle.processAllAvailable()
+        assert(valueRows(target) == Seq(ModRow("d1", "temp", 2.0, 2.0,
           "2024-01-01T00:00:05.000000")))
-      } finally target.close()
+      } finally { handle.stop(); target.close() }
     }
   }
 
   test("per-point auto-scaling from the config dim (C1/C2 streaming parity)") {
-    val target = new InMemoryTarget
+    implicit val sqlCtx = spark.sqlContext
     val scaling = Seq(
       ("d1", "temp", "slope_intercept", 2.0, 1.0, 0.0, 0.0, 0.0, 0.0),
       ("d1", "pct", "point_slope", 1.0, 0.0, 0.0, 10.0, 0.0, 100.0))
       .toDF("device", "measure_name", "scale_mode", "slope", "offset",
         "value_min", "value_max", "target_min", "target_max")
     val t = ts("2024-01-01 00:00:01")
-    val batch = Seq(
-      ("d1", "temp", 4.0, t, true, 1L),
-      ("d1", "pct", 2.5, t, true, 2L),
-      ("d1", "unconfigured", 7.0, t, true, 3L))
-      .toDF("device", "measure_name", "raw_value", "source_ts", "status_ok", "event_seq")
-    try {
-      CurrentValuesSink.applyBatchScaled(batch, target, scaling)
-      val byMeasure = target.snapshot.map(r => r.measure_name -> r.measure_value).toMap
-      assert(byMeasure("temp") == 9.0)  // C1: 4*2 + 1
-      assert(byMeasure("pct") == 25.0)  // C2: (100-0)/(10-0) * (2.5-0) + 0
-      assert(byMeasure("unconfigured") == 7.0) // no config row → identity
-      // the devicePoints column shape (daq_name) is accepted as-is
-      CurrentValuesSink.applyBatchScaled(batch, target,
-        scaling.withColumnRenamed("device", "daq_name"))
-      assert(target.snapshot.map(r => r.measure_name -> r.measure_value)
-        .toMap.apply("temp") == 9.0)
-    } finally target.close()
+    // the devicePoints column shape (daq_name) is accepted as-is
+    Seq(scaling, scaling.withColumnRenamed("device", "daq_name")).foreach { dim =>
+      val input = MemoryStream[MeasureEvent]
+      val target = new InMemoryTarget
+      val handle = IngestPipeline.startScaled(input.toDF(), target, dim,
+        trigger = Trigger.ProcessingTime("0 seconds"))
+      try {
+        input.addData(
+          MeasureEvent("d1", "temp", 4.0, t, status_ok = true),
+          MeasureEvent("d1", "pct", 2.5, t, status_ok = true),
+          MeasureEvent("d1", "unconfigured", 7.0, t, status_ok = true))
+        handle.processAllAvailable()
+        val byMeasure = target.snapshot.map(r => r.measure_name -> r.measure_value).toMap
+        assert(byMeasure("temp") == 9.0)  // C1: 4*2 + 1
+        assert(byMeasure("pct") == 25.0)  // C2: (100-0)/(10-0) * (2.5-0) + 0
+        assert(byMeasure("unconfigured") == 7.0) // no config row → identity
+        assert(byMeasure(graft.operators.CurrentValues.OnlineMeasure) == 1.0) // never scaled
+      } finally { handle.stop(); target.close() }
+    }
   }
 
   test("seed + reset + heartbeat lifecycle (K1/K3/K4)") {
