@@ -21,10 +21,6 @@ object Tables {
     * Spark inferred TIMESTAMP or TIMESTAMP_NTZ from the file.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // every query path loads through here — the one registration point
-    // that guarantees the graft_* natives resolve at analysis time on
-    // whatever session the caller brought (idempotent, ~free)
-    graft.functions.NativeTextOps.register(spark)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) { (d, f) =>
       f.dataType match {

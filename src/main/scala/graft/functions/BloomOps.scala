@@ -1,43 +1,31 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{call_function, lit, xxhash64}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.functions.xxhash64
 
-/** Catalyst's bloom-filter expressions surfaced as session functions.
-  * Spark ships `BloomFilterAggregate` / `BloomFilterMightContain` for its
-  * own runtime row-group filters but does not register them publicly —
-  * the same temp-function route as `graft_dot` makes them usable from
-  * the DataFrame API with zero new dependencies. The aggregate builds the
+/** Catalyst's bloom-filter expressions surfaced as Columns. Spark ships
+  * `BloomFilterAggregate` / `BloomFilterMightContain` for its own runtime
+  * row-group filters but exposes no public builder for them; wrapping
+  * them directly (as `NativeVectorOps` does) makes them usable from the
+  * DataFrame API with zero new dependencies. The aggregate builds the
   * sketch DISTRIBUTED (partial per partition, merged once); only the
   * finished ~numBits/8-byte sketch ever reaches the driver.
   */
 object BloomOps {
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val aggId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_agg")
-    if (!registry.functionExists(aggId)) {
-      registry.createOrReplaceTempFunction("graft_bloom_agg",
-        exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)), "internal")
-    }
-    val mcId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_might_contain")
-    if (!registry.functionExists(mcId)) {
-      registry.createOrReplaceTempFunction("graft_might_contain",
-        exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1)), "internal")
-    }
-  }
-
   /** Aggregate a key column into a serialized bloom filter (xxhash64'd —
     * the only input the catalyst aggregate accepts).
     */
   def bloomAgg(key: Column, expectedItems: Long, numBits: Long): Column =
-    call_function("graft_bloom_agg", xxhash64(key), lit(expectedItems), lit(numBits))
+    column(new BloomFilterAggregate(expression(xxhash64(key)),
+      Literal(expectedItems), Literal(numBits)).toAggregateExpression())
 
   /** Membership probe of `key` against a driver-held serialized sketch
     * (ships to executors as a literal — one copy per plan, not per row).
     */
   def mightContain(sketch: Array[Byte], key: Column): Column =
-    call_function("graft_might_contain", lit(sketch), xxhash64(key))
+    column(BloomFilterMightContain(Literal(sketch), expression(xxhash64(key))))
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 
 /** Native Catalyst expression for content-defined chunk boundaries — the
@@ -93,70 +92,42 @@ object CdcBoundaries {
   }
 }
 
-/** Session registration + Column API (the NativeVectorOps pattern). */
+/** Column API for the native text expressions (the NativeVectorOps
+  * pattern: each builder wraps its expression into a Column directly).
+  */
 object NativeTextOps {
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def reg(name: String, build: Seq[Expression] => Expression): Unit = {
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!registry.functionExists(id)) {
-        registry.createOrReplaceTempFunction(name, build, "internal")
-      }
-    }
-    reg("graft_cdc_boundaries", exprs => CdcBoundaries(exprs.head))
-    reg("graft_normalize_text", exprs => NormalizeTextExpr(exprs.head))
-    reg("graft_text_features", exprs => TextFeaturesExpr(exprs.head))
-    reg("graft_bpe_count", exprs => BpeTokenCountExpr(exprs.head))
-    reg("graft_shingle_hashes", exprs => ShingleHashesExpr(exprs.head))
-    reg("graft_md5_hash32", exprs => Md5Hash32Expr(exprs.head))
-    reg("graft_char_class_sig", exprs => CharClassSigExpr(exprs.head))
-    reg("graft_sig_l1", exprs => SigL1Expr(exprs(0), exprs(1)))
-    reg("graft_pii_redact", exprs => PiiRedactExpr(exprs.head))
-  }
-
-  /** Column builders register on the ACTIVE session at construction time
-    * (and callers with a specific session still call [[register]]
-    * directly): `call_function` resolves lazily at analysis, so a column
-    * built in a context without an explicit session — a query lambda, a
-    * spec's hand-built frame — must not depend on the caller remembering
-    * to register. Idempotent and ~free.
-    */
-  private def registered(name: String, cols: Column*): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, cols: _*)
-  }
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 
   def cdcBoundaries(text: Column): Column =
-    registered("graft_cdc_boundaries", text)
+    column(CdcBoundaries(expression(text)))
 
   /** One-pass twin of [[TextOps.normalized]] (see TextKernel). */
   def normalizedText(text: Column): Column =
-    registered("graft_normalize_text", text)
+    column(NormalizeTextExpr(expression(text)))
 
   /** One-pass quality/lang-ID feature struct (see TextKernel.features). */
   def textFeatures(text: Column): Column =
-    registered("graft_text_features", text)
+    column(TextFeaturesExpr(expression(text)))
 
   /** One-pass BPE-ish pre-tokenization count (see TextKernel). */
   def bpeCount(text: Column): Column =
-    registered("graft_bpe_count", text)
+    column(BpeTokenCountExpr(expression(text)))
 
   /** One-pass word-3-gram xxhash64 array (see TextKernel.shingleHashes). */
   def shingleHashes(text: Column): Column =
-    registered("graft_shingle_hashes", text)
+    column(ShingleHashesExpr(expression(text)))
 
   /** Digest-direct md5 prefix hash (see TextKernel.md5Hash32). */
   def md5Hash32(text: Column): Column =
-    registered("graft_md5_hash32", text)
+    column(Md5Hash32Expr(expression(text)))
 
   /** Packed 32-bin char-class histogram (see TextKernel.charClassSig). */
   def charClassSig(text: Column): Column =
-    registered("graft_char_class_sig", text)
+    column(CharClassSigExpr(expression(text)))
 
   /** PII counts + sequential redaction struct (see TextKernel.piiRedact). */
   def piiRedact(text: Column): Column =
-    registered("graft_pii_redact", text)
+    column(PiiRedactExpr(expression(text)))
 
   /** L1 distance between two [[charClassSig]] signatures — a NATIVE
     * binary expression, one static call per pair. (A 32-term Column tree
@@ -168,5 +139,5 @@ object NativeTextOps {
     * levenshtein (count filtering, the standard edit-join bound).
     */
   def sigL1(a: Column, b: Column): Column =
-    registered("graft_sig_l1", a, b)
+    column(SigL1Expr(expression(a), expression(b)))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native Catalyst expression for the embedding dot product — the ANN hot
@@ -178,60 +177,14 @@ case class LshBuckets(child: Expression, tables: Int, planesPerTable: Int, dim: 
     })
 }
 
-/** Session registration + Column-level API for the native expression. */
+/** Column-level API for the native vector expressions. Each builder wraps
+  * its expression into a Column directly (see `GraftSqlBridge`), so the
+  * columns resolve in any session without a function registry entry.
+  */
 object NativeVectorOps {
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 
-  /** Idempotent per-session registration (temp function registry — no
-    * SparkSessionExtensions requirement on the session builder, so driver
-    * contract mains can call it from inside any query fn). The existence
-    * check keeps repeat calls silent (createOrReplace WARNs on replace).
-    */
-  def register(spark: SparkSession): Unit = {
-    // the optimizer rules ride along: any session using the native ops
-    // also gets the HOF-dot and intersect-count rewrites
-    graft.plans.GraftRules.install(spark)
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
-    if (!registry.functionExists(id)) {
-      registry.createOrReplaceTempFunction(
-        "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "internal")
-    }
-    val lshId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lsh_buckets")
-    if (!registry.functionExists(lshId)) {
-      registry.createOrReplaceTempFunction("graft_lsh_buckets", {
-        case Seq(e, Literal(t: Int, _), Literal(p: Int, _), Literal(d: Int, _)) =>
-          LshBuckets(e, t, p, d)
-        case other => throw new IllegalArgumentException(
-          s"graft_lsh_buckets(embedding, tables, planesPerTable, dim) " +
-            s"with literal int config, got $other")
-      }, "internal")
-    }
-    val amId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_argmax_cell")
-    if (!registry.functionExists(amId)) {
-      registry.createOrReplaceTempFunction("graft_argmax_cell", {
-        case Seq(e,
-            Literal(cl: ArrayData, ArrayType(LongType, _)),
-            Literal(fl: ArrayData, ArrayType(DoubleType, _)),
-            Literal(nm: ArrayData, ArrayType(DoubleType, _)),
-            Literal(d: Int, _)) =>
-          ArgmaxCosine(e, new CentroidModel(
-            cl.toLongArray(), fl.toDoubleArray(), nm.toDoubleArray(), d))
-        case other => throw new IllegalArgumentException(
-          s"graft_argmax_cell(embedding, cells, centsFlat, norms, dim) " +
-            s"with literal model arrays, got $other")
-      }, "internal")
-    }
-    val zId = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_zvalue")
-    if (!registry.functionExists(zId)) {
-      registry.createOrReplaceTempFunction("graft_zvalue", {
-        case Seq(x, y, Literal(b: Int, _)) => ZValue(x, y, b)
-        case other => throw new IllegalArgumentException(
-          s"graft_zvalue(x, y, bits) with literal int bits, got $other")
-      }, "internal")
-    }
-  }
-
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 
   /** Best-cosine cell id of `e` against a driver-collected centroid
     * model (see [[ArgmaxCosine]]) — the whole IVF/k-means assignment as
@@ -250,29 +203,21 @@ object NativeVectorOps {
       i += 1
     }
     val norms = cents.map(ArgmaxCosine.norm)
-    // direct construction (round 15): the model rides as ONE plan-time
-    // reference object with content-based equality — the former
-    // typedlit path embedded three array literals (~34 MB at the
-    // calibrated cell clamp) into the pre-analysis plan on EVERY call,
-    // and the resulting expressions compared by array reference, so
-    // identical assignments never canonicalized equal (r14 ADVICE)
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(ArgmaxCosine(
-      GraftSqlBridge.expression(e),
-      new CentroidModel(cells.clone(), flat, norms, dim)))
+    // the model rides as ONE plan-time reference object with
+    // content-based equality: three array literals would put ~34 MB (at
+    // the calibrated cell clamp) into the pre-analysis plan on every
+    // call, and would compare by array reference, so identical
+    // assignments would never canonicalize equal
+    column(ArgmaxCosine(expression(e), new CentroidModel(cells.clone(), flat, norms, dim)))
   }
 
   /** Morton key of two bigint dimensions (see [[ZValue]]). */
-  def zValue(x: Column, y: Column, bits: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_zvalue", x, y, lit(bits))
-  }
+  def zValue(x: Column, y: Column, bits: Int): Column =
+    column(ZValue(expression(x), expression(y), bits))
 
   /** One bucket per table: element-major fused sign-LSH (see [[LshBuckets]]). */
-  def lshBuckets(e: Column, tables: Int, planesPerTable: Int, dim: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_lsh_buckets", e, lit(tables), lit(planesPerTable), lit(dim))
-  }
+  def lshBuckets(e: Column, tables: Int, planesPerTable: Int, dim: Int): Column =
+    column(LshBuckets(expression(e), tables, planesPerTable, dim))
 
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions.sqrt

@@ -38,10 +38,9 @@ object TextOps {
     s"list_transform(range(1, len($ws)), i -> $ws[i] || ' ' || $ws[i+1])"
 
   /** Aggressive normalization for near-dup fingerprinting: lower, strip
-    * non-alphanumerics, collapse whitespace. One-pass TextKernel native
-    * (callers register via NativeTextOps — every operator entry point
-    * that builds this column does); [[normalizedRef]] is the original
-    * declarative form, kept as the property-test reference.
+    * non-alphanumerics, collapse whitespace. One-pass TextKernel native;
+    * [[normalizedRef]] is the original declarative form, kept as the
+    * property-test reference.
     */
   def normalized(text: Column): Column = NativeTextOps.normalizedText(text)
 

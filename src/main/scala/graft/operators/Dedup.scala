@@ -29,7 +29,6 @@ object Dedup {
     * whitespace): each doc labeled with its canonical representative.
     */
   def fingerprint(docs: DataFrame): DataFrame = {
-    graft.functions.NativeTextOps.register(docs.sparkSession)
     val fp = docs.withColumn("fp", md5(TextOps.normalized(col("text"))))
     val w = Window.partitionBy("fp")
     fp.withColumn("canonical_id", min(col("doc_id")).over(w))
@@ -586,7 +585,6 @@ object Dedup {
     * verification step.
     */
   private[graft] def shingleHashes(docs: DataFrame): DataFrame = {
-    graft.functions.NativeTextOps.register(docs.sparkSession)
     // hash BEFORE the distinct: the dedup exchange then carries
     // (doc_id, 8-byte long) instead of (doc_id, ~30-byte string). The
     // hashes come straight from the one-pass TextKernel native
@@ -1025,7 +1023,6 @@ object Dedup {
     */
   def incremental(batch: DataFrame, corpus: DataFrame, key: DataFrame => org.apache.spark.sql.Column,
                   expectedItems: Long = 1000000L, numBits: Long = 8388608L): DataFrame = {
-    BloomOps.register(batch.sparkSession)
     val corpusKeys = corpus.select(key(corpus).as("__key"))
     val sketch = corpusKeys
       .select(BloomOps.bloomAgg(col("__key"), expectedItems, numBits).as("bf"))

@@ -22,10 +22,11 @@ object GraphOps {
       .sum
 
   /** Scale-adaptive edge-layout decision (round 16 — wiring the r15
-    * `GraphAdjExp` adjudication into the declared graph queries): when
-    * the input behind an edge frame is big enough that the in-memory /
-    * DISK_ONLY cache path starts paying serialized-cache writes + reads
-    * per round under memory pressure, materialize the shared edge grain
+    * bucketed-adjacency adjudication, numbers in `SCALING_r15.json`,
+    * into the declared graph queries): when the input behind an edge
+    * frame is big enough that the in-memory / DISK_ONLY cache path
+    * starts paying serialized-cache writes + reads per round under
+    * memory pressure, materialize the shared edge grain
     * as a BUCKETED parquet table instead (bucket count ≈ the session's
     * shuffle partitions — the r15 experiment showed a bucket count far
     * below the shuffle-partition count caps round-join parallelism at
@@ -34,7 +35,7 @@ object GraphOps {
     * distribution exchange-free, the table is columnar-compressed (a
     * fraction of the java-serialized cache bytes on disk), and nothing
     * needs to fit in cluster memory. The build runs INSIDE the calling
-    * query (SaveMode.Overwrite per invocation — no cross-run reuse).
+    * query, into a table of its own ([[bucketedScratch]]).
     *
     * Returns Some(bucketCount) for the bucketed layout, None for the
     * cache layout. Decision inputs are data-derived (leaf input bytes),
@@ -63,12 +64,24 @@ object GraphOps {
       math.max(32, edges.sparkSession.sessionState.conf.numShufflePartitions)))
   }
 
-  /** The session warehouse dir — where auto-selected bucketed graph
-    * tables live. On a real cluster this must be shared storage (the
-    * usual warehouse contract); locally it is ./spark-warehouse.
+  /** Writes `grain` as a `src`-bucketed table under a name unique to
+    * this call, so graph frames built before either runs never read each
+    * other's adjacency, and returns the table. It lives in the session
+    * warehouse dir (shared storage on a real cluster; locally
+    * ./spark-warehouse) and is deleted at JVM exit with the round
+    * snapshots. The repartition aligns writer tasks with buckets
+    * (HashPartitioning and the bucket spec hash the same way, so each
+    * task emits exactly one bucket's file).
     */
-  private def warehouseDir(spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.get("spark.sql.warehouse.dir")
+  private def bucketedScratch(grain: DataFrame, prefix: String, buckets: Int): DataFrame = {
+    val spark = grain.sparkSession
+    val name = s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val path = s"${spark.conf.get("spark.sql.warehouse.dir")}/$name"
+    Dedup.RoundSnapshots.registerForCleanup(spark, path)
+    graft.sources.Storage.writeSrcBucketed(
+      grain.repartition(buckets, col("src")), name, path, buckets)
+    spark.table(name)
+  }
 
   /** Fixed-iteration PageRank with INTEGER fixed-point arithmetic.
     *
@@ -141,17 +154,9 @@ object GraphOps {
         spark.table(tableName)
       case None =>
         // round 16: auto-select the bucketed layout at scale (see
-        // bucketedGraphLayout) — build inside this invocation, buckets ≈
-        // shuffle partitions, the repartition aligning writer tasks with
-        // buckets (HashPartitioning and the bucket spec hash the same
-        // way, so each task emits exactly one bucket's file).
+        // bucketedGraphLayout), buckets ≈ shuffle partitions
         bucketedGraphLayout(edges) match {
-          case Some(b) =>
-            val name = "graft_pr_adj"
-            graft.sources.Storage.writeSrcBucketed(
-              grouped.repartition(b, col("src")), name,
-              s"${warehouseDir(spark)}/$name", buckets = b)
-            spark.table(name)
+          case Some(b) => bucketedScratch(grouped, "graft_pr_adj", b)
           case None => grouped.persist()
         }
     }
@@ -248,14 +253,9 @@ object GraphOps {
     // bucketed scan exchange-free exactly like the cached repartition,
     // but the bytes on disk are columnar-compressed parquet instead of
     // java-serialized cache blocks, and re-reads never evict. Built
-    // inside the calling query, Overwrite per invocation.
+    // inside the calling query, one table per invocation.
     bucketedGraphLayout(edges) match {
-      case Some(b) =>
-        val name = "graft_sym_adj"
-        graft.sources.Storage.writeSrcBucketed(
-          sym.repartition(b, col("src")), name,
-          s"${warehouseDir(edges.sparkSession)}/$name", buckets = b)
-        edges.sparkSession.table(name)
+      case Some(b) => bucketedScratch(sym, "graft_sym_adj", b)
       case None =>
         sym.repartition(col("src")).persist(StorageLevel.DISK_ONLY)
     }
@@ -310,11 +310,11 @@ object GraphOps {
   def triangleCounts(edges: DataFrame): DataFrame = {
     // Round-15 optimization note (measured, kept AS-IS): two rewrites
     // were tried at the sf10-zipf corpus and REVERTED on measurement
-    // (graft.TriExp is the experiment harness, OPTIMIZATION_r15.md the
-    // numbers). (1) A wedge Bloom pre-filter (guide §3.2) before the
-    // closure join: building the filter over the 15M oriented tip-edge
-    // keys cost 18.1 s (stat.bloomFilter's per-partition 18 MB partials)
-    // while the ENTIRE wedge stream it would prune is only ~103k rows on
+    // (the numbers are in OPTIMIZATION_r15.md). (1) A wedge Bloom
+    // pre-filter (guide §3.2) before the closure join: building the
+    // filter over the 15M oriented tip-edge keys cost 18.1 s
+    // (stat.bloomFilter's per-partition 18 MB partials) while the
+    // ENTIRE wedge stream it would prune is only ~103k rows on
     // this graph — the fixture's orientation keeps wedge volume tiny, so
     // the closure exchange was never the cost. (2) Grouped (u → sorted
     // out-neighbor array) wedge generation replacing the self-join: the

@@ -71,7 +71,6 @@ object KMeans {
     * bounded k·dim model state, the same posture the broadcast carried.
     */
   private def withCluster(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val rows = centroids.select(col("cluster").cast(IntegerType), col("centroid"))
       .collect()
     if (rows.isEmpty)
@@ -162,7 +161,6 @@ object KMeans {
     * and engines. Requires ≥ 2 clusters.
     */
   def clusterQuality(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val e = embD("embedding")
     val cents = centroids.select(col("cluster"), col("centroid"),
       sqrt(NativeVectorOps.dot(col("centroid"), col("centroid"))).as("c_norm"))
@@ -200,7 +198,6 @@ object KMeans {
     * analogue of (negated) WCSS; Lloyd rounds must not worsen it.
     */
   def meanAssignedCosine(embeddings: DataFrame, centroids: DataFrame): Double = {
-    NativeVectorOps.register(embeddings.sparkSession)
     assign(embeddings, centroids).join(embeddings, Seq("vec_id"))
       .join(broadcast(centroids), Seq("cluster"))
       .select(avg(NativeVectorOps.cosine(embD("embedding"), col("centroid"))).as("m"))

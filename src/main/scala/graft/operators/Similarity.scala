@@ -32,7 +32,6 @@ object Similarity {
     * (tiny) global sort.
     */
   def bruteForceTopK(embeddings: DataFrame, queryMaxId: Long, k: Int): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val q = embeddings.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val scored = embeddings.crossJoin(broadcast(q))
@@ -56,7 +55,6 @@ object Similarity {
     */
   def bitextMine(embeddings: DataFrame, srcLabel: Int, tgtLabel: Int,
       srcMaxId: Long, threshold: Double): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val src = embeddings
       .filter(col("label") === srcLabel && col("vec_id") < srcMaxId)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -85,7 +83,6 @@ object Similarity {
     * doubles (and therefore the ranks) agree bit-for-bit cross-engine.
     */
   def bruteForceTopKL2(embeddings: DataFrame, queryMaxId: Long, k: Int): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val q = embeddings.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val scored = embeddings.crossJoin(broadcast(q))
@@ -107,7 +104,6 @@ object Similarity {
     */
   def bruteForceTopKPrefix(embeddings: DataFrame, queryMaxId: Long, k: Int,
                            dims: Int): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val pre = embeddings.select(col("vec_id"),
       slice(col("embedding"), 1, dims).as("embedding"))
     bruteForceTopK(pre, queryMaxId, k)
@@ -149,7 +145,6 @@ object Similarity {
     * planeDot + groupBy formulation cost an exchange and the HOF fallback).
     */
   def lshBuckets(embeddings: DataFrame): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     // single table of NumPlanes planes via the FUSED expression (one
     // element-major pass; bit-identical to the composed planeBit sum for
     // non-null vectors — DotProductExprSpec pins the equivalence).
@@ -167,7 +162,6 @@ object Similarity {
     * The equi-join on bucket replaces the cross product.
     */
   def lshTopK(embeddings: DataFrame, queryMaxId: Long, k: Int): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val withBucket = embeddings.join(lshBuckets(embeddings), Seq("vec_id"))
     val q = withBucket.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("bucket"))
@@ -188,7 +182,6 @@ object Similarity {
     */
   def lshBucketsMulti(embeddings: DataFrame, tables: Int = 8,
                       planesPerTable: Int = 4): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     // all tables' buckets in ONE fused element-major pass over the
     // embedding (the composed per-plane form re-read the array once per
     // plane — 32× the array traffic); the only row multiplication is the
@@ -225,7 +218,6 @@ object Similarity {
     */
   def knnDistanceOutliers(embeddings: DataFrame, k: Int, bottomN: Int,
                           maxBucket: Long = 200L): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val wb = Window.partitionBy("bucket")
     val capped = lshBuckets(embeddings)
       .withColumn("__nb", count(lit(1)).over(wb))
@@ -260,7 +252,6 @@ object Similarity {
     */
   def lshTopKMulti(embeddings: DataFrame, queryMaxId: Long, k: Int,
                    tables: Int = 8, planesPerTable: Int = 4): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val buckets = lshBucketsMulti(embeddings, tables, planesPerTable)
     // candidates carry BARE ids through the cross-table dedup — shuffling
     // the 64-double embeddings through that exchange would dominate its
@@ -310,7 +301,6 @@ object Similarity {
                         tables: Int = 8, planesPerTable: Int = 4,
                         probes: Int = 2): DataFrame = {
     require(probes >= 0 && probes <= planesPerTable)
-    NativeVectorOps.register(embeddings.sparkSession)
     val corpus = lshBucketsMulti(embeddings, tables, planesPerTable)
     val e = embD("embedding")
     // per table: base bucket + the `probes` lowest-|margin| single-bit
@@ -405,7 +395,6 @@ object Similarity {
     */
   def ivfCells(embeddings: DataFrame, step: Long = 100L,
                calibrate: Boolean = true): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val stepR = if (calibrate) calibrateIvfStep(embeddings.count(), step) else step
     ivfCellCol(embeddings, stepR) match {
       case None => // no centroid rows: the former crossJoin emitted nothing
@@ -444,7 +433,6 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, queryMaxId: Long, k: Int,
               nprobe: Int = 2, step: Long = 100L,
               calibrate: Boolean = true): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     // resolve the step ONCE here so the probe's own centroid pick and
     // the persisted ivfIndex assignment see the same calibrated cells
     val stepR = if (calibrate) calibrateIvfStep(embeddings.count(), step) else step
@@ -496,7 +484,6 @@ object Similarity {
     */
   def ivfTopKTrained(embeddings: DataFrame, centroids: DataFrame,
       queryMaxId: Long, k: Int, nprobe: Int = 2): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val e = embD("embedding")
     val cents = centroids.select(col("cluster").as("cell"),
       col("centroid").as("c_emb"),
@@ -608,7 +595,6 @@ object Similarity {
                       tables: Int = 8, planesPerTable: Int = 4,
                       capBucketWidth: Option[Int] = Some(DefaultCapBucketWidth),
                       calibrate: Boolean = true): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val (tabs, planes) =
       if (calibrate)
         calibrateLshGeometry(embeddings.filter(col("embedding").isNotNull).count(),
@@ -694,7 +680,6 @@ object Similarity {
   def semanticContamination(embeddings: DataFrame, threshold: Double,
       tables: Int = 8, planesPerTable: Int = 4,
       calibrate: Boolean = true): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     // same corpus-calibrated band geometry as [[nearDupPairsLsh]] — the
     // train×eval within-bucket join has the identical N²/buckets shape
     val (tabs, planes) =
@@ -769,7 +754,6 @@ object Similarity {
     * Output: the k lowest-cosine (most-outlying) vectors per language.
     */
   def centroidOutliers(embeddings: DataFrame, docs: DataFrame, k: Int): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     // the centroid aggregation AND the scoring pass both consume this
     // join+cast — persisted so the corpus-side join and the per-row
     // float→double widening run once (512 B/row at dim 64; MEMORY_AND_
@@ -812,7 +796,6 @@ object Similarity {
     * Output per label: (label, n_a, n_b, drift_cosine).
     */
   def embeddingDrift(embeddings: DataFrame, dim: Int = Dim): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     // dimension-clean rows only (mirrors the q208 audit's n_wrong_dim
     // definition): a wrong-dimension vector would contribute to SOME
     // positions' n but not others, skewing per-pos centroids — and
@@ -845,7 +828,6 @@ object Similarity {
     * scales past it.
     */
   def nearDupPairs(embeddings: DataFrame, maxId: Long, topK: Int): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val sub = embeddings.filter(col("vec_id") < maxId)
     val a = sub.select(col("vec_id").as("d1"), col("embedding").as("e1"))
     val b = sub.select(col("vec_id").as("d2"), col("embedding").as("e2"))
@@ -927,7 +909,6 @@ object Similarity {
     */
   def sq8TopK(embeddings: DataFrame, queryMaxId: Long, k: Int,
               candidates: Int = 20): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     // persisted: the reconstruction feeds BOTH the candidate scan and the
     // broadcast query set — unpersisted, each branch would re-run the
     // full-corpus bounds aggregation + reconstruction (the ivfIndex
@@ -1085,7 +1066,6 @@ object Similarity {
     */
   def pqTopK(embeddings: DataFrame, queryMaxId: Long, k: Int,
              candidates: Int = 20): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val cents = pqCentroids(embeddings)
     val dtable = pqDistanceTables(embeddings, cents, queryMaxId)
     val adc = pqAssign(embeddings, cents).select("vec_id", "codes")
@@ -1111,7 +1091,6 @@ object Similarity {
   def ivfPqTopK(embeddings: DataFrame, queryMaxId: Long, k: Int,
                 nprobe: Int = 2, step: Long = 100L,
                 candidates: Int = 20, calibrate: Boolean = true): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val stepR = if (calibrate) calibrateIvfStep(embeddings.count(), step) else step
     val cents = pqCentroids(embeddings)
     val qCells = probeCells(embeddings, queryMaxId, nprobe, stepR)
@@ -1152,7 +1131,6 @@ object Similarity {
     */
   def semanticDedup(embeddings: DataFrame, threshold: Double, step: Long = 100L,
                     calibrate: Boolean = true): DataFrame = {
-    NativeVectorOps.register(embeddings.sparkSession)
     val e = embD("embedding")
     val stepR = if (calibrate) calibrateIvfStep(embeddings.count(), step) else step
     // cell inlined in the SAME projection as emb/nrm (round 14 — no

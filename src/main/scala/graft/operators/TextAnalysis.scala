@@ -25,7 +25,6 @@ object TextAnalysis {
     // whitespace-token count is lowering-invariant (no case mapping
     // produces or removes whitespace), so the shared feature struct's
     // n_words is exactly size(split(trim(text), "\s+")).
-    graft.functions.NativeTextOps.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.functions.NativeTextOps.textFeatures(col("text"))
         .getField("n_words").as("n_ws_tokens"),
@@ -41,7 +40,6 @@ object TextAnalysis {
     // form was a regex split + a regexp_replace + three interpreted
     // HOF passes per row — the top of the sf10 board). Identical
     // columns/types; equivalence is property-pinned in TextKernelSpec.
-    graft.functions.NativeTextOps.register(docs.sparkSession)
     val tf = graft.functions.NativeTextOps.textFeatures(col("text"))
     docs
       .withColumn("n_chars_m", tf.getField("n_chars"))
@@ -134,7 +132,6 @@ object TextAnalysis {
     // n_words/n_en/has_cjk from the same one-pass TextKernel struct the
     // quality gate uses — when chained (curate/curationFunnel), codegen
     // subexpression elimination evaluates the kernel once per row.
-    graft.functions.NativeTextOps.register(docs.sparkSession)
     val tf = graft.functions.NativeTextOps.textFeatures(col("text"))
     docs
       .withColumn("n_words", tf.getField("n_words"))
@@ -335,7 +332,6 @@ object TextAnalysis {
 
   def dropFrequentSpans(docs: DataFrame, minDocs: Long,
                         calibrate: Boolean = true): DataFrame = {
-    graft.functions.NativeTextOps.register(docs.sparkSession)
     val k = if (calibrate) calibrateSpanMinDocs(docs.count(), minDocs) else minDocs
     val withWs = docs.withColumn("ws", TextOps.words(col("text")))
     // sh feeds BOTH the document-frequency aggregation and the coverage
@@ -407,7 +403,6 @@ object TextAnalysis {
     */
   def repeatedIntervals(docs: DataFrame, minDocs: Long,
                         calibrate: Boolean = true): DataFrame = {
-    graft.functions.NativeTextOps.register(docs.sparkSession)
     val k = if (calibrate) calibrateSpanMinDocs(docs.count(), minDocs) else minDocs
     // xxhash64 shingle images via the one-pass TextKernel native, same
     // rationale/adjudication as [[dropFrequentSpans]] (positions only —
@@ -1385,7 +1380,6 @@ object TextAnalysis {
     * per doc: `(doc_id, n_chunks, n_dup_chunks, n_kept_chars)`.
     */
   def cdcDedup(docs: DataFrame): DataFrame = {
-    graft.functions.NativeTextOps.register(docs.sparkSession)
     val n = length(col("text"))
     // boundary scan = the native rolling-hash expression (codegen'd
     // O(n); the declarative HOF form was interpreted W·n lambda evals —

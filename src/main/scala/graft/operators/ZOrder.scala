@@ -34,7 +34,6 @@ object ZOrder {
     */
   def cluster(df: DataFrame, x: Column, y: Column, bits: Int = 16,
       numFiles: Int = 16): DataFrame = {
-    NativeVectorOps.register(df.sparkSession)
     df.withColumn("__zkey", zKey(x, y, bits))
       .repartitionByRange(numFiles, col("__zkey"))
       .sortWithinPartitions("__zkey")

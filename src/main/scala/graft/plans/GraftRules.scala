@@ -16,8 +16,7 @@ import graft.functions.DotProduct
   * order: compose ops → native Expression → LogicalPlan/Rule/Strategy).
   * Installed at runtime through `spark.experimental.extraOptimizations`
   * ([[GraftRules.install]], idempotent, callable on any session the
-  * driver hands us) or at session build time via
-  * `graft.functions.GraftExtensions`.
+  * driver hands us).
   *
   * Both rules are pure expression rewrites with guards tight enough that
   * the rewrite is OBSERVABLY identical (spec-pinned), never merely

@@ -380,7 +380,6 @@ object DedupQueries {
         |       (n_dups * 1000000) // n_docs AS dup_rate_1e6
         |FROM a ORDER BY source""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window.partitionBy("fp")
-      graft.functions.NativeTextOps.register(s)
       Tables.documents(s, dir)
         .withColumn("fp", md5(TextOps.normalized(col("text"))))
         .withColumn("canonical_id", min(col("doc_id")).over(w))

@@ -75,7 +75,7 @@ object ReferenceQueries {
     // C1+C2 — per-POINT scaling dispatched on the template's scale_mode
     // (the reference scales each monitored point by its own config,
     // `Services/OpcSubscribeService.cs:565-576`); unconfigured points
-    // fall back to the identity. Streaming twin: applyBatchScaled.
+    // fall back to the identity. Streaming twin: IngestPipeline.startScaled.
     QueryDef("q68_scale_by_mode",
       M + """, cfg AS (SELECT * FROM (VALUES
         |  ('click', 'slope_intercept', CAST(0.1 AS DOUBLE), CAST(-2.0 AS DOUBLE),

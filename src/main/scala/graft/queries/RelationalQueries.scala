@@ -531,7 +531,6 @@ object RelationalQueries {
         |      FROM d)
         |SELECT event_id, user_id, day_ord, ${ZOrderOracle.termsSql} AS zval
         |FROM m ORDER BY zval, event_id LIMIT 100""".stripMargin) { (s, dir) =>
-      graft.functions.NativeVectorOps.register(s)
       val day = datediff(to_date(col("ts")), lit("1970-01-01")).cast(LongType)
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), day.as("day_ord"),

@@ -217,7 +217,6 @@ object TrainingQueries {
         |JOIN (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings) e
         |  ON d.doc_id = e.vec_id
         |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-      NativeVectorOps.register(s)
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"),
           size(split(trim(col("text")), "\\s+")).cast("long").as("n_ws_tokens"))

@@ -15,8 +15,9 @@ class DotProductExprSpec extends SparkSpec {
       Array.tabulate(64)(d => math.cos(i * 64 + d) * 10))
   }.toDF("id", "a", "b")
 
-  /** Run with GraftRules UNINSTALLED: register() now also installs the
-    * HOF-dot→native rewrite, which would silently turn the "HOF side" of
+  /** Run with GraftRules UNINSTALLED: the shared test session gets the
+    * rules from GraftRulesSpec and `Dedup.containmentPairs`, and the
+    * HOF-dot→native rewrite would silently turn the "HOF side" of
     * every parity assertion below into the native expression — parity
     * pinned against itself proves nothing, and this spec is the very
     * contract the rewrite rule's soundness rests on.
@@ -28,7 +29,6 @@ class DotProductExprSpec extends SparkSpec {
   }
 
   test("native dot == HOF dot, bit-for-bit, interpreted and codegen paths") {
-    NativeVectorOps.register(spark)
     withoutGraftRules {
       val both = vecs.select(
         NativeVectorOps.dot(col("a"), col("b")).as("native"),
@@ -42,7 +42,6 @@ class DotProductExprSpec extends SparkSpec {
   }
 
   test("native cosine == HOF cosine; null array propagates null") {
-    NativeVectorOps.register(spark)
     withoutGraftRules {
       val both = vecs.select(
         NativeVectorOps.cosine(col("a"), col("b")).as("native"),
@@ -57,7 +56,6 @@ class DotProductExprSpec extends SparkSpec {
   }
 
   test("length mismatch: native dot == HOF dot == NULL (the rewrite's contract)") {
-    NativeVectorOps.register(spark)
     withoutGraftRules {
       val df = Seq((Array(1.0, 2.0), Array(1.0, 2.0, 3.0))).toDF("a", "b")
         .repartition(2) // keep the expressions live (no constant folding)
@@ -71,7 +69,6 @@ class DotProductExprSpec extends SparkSpec {
   }
 
   test("fused LSH buckets == composed per-plane sign sum, every table, bit-for-bit") {
-    NativeVectorOps.register(spark)
     val (tables, planesPerTable, dim) = (8, 4, 64)
     // the composed formulation the fused expression replaced: one native
     // dot per plane against its literal weight array, sign → bit

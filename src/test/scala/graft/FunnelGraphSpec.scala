@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Funnel, GraphOps}
 
@@ -475,5 +476,33 @@ class FunnelGraphSpec extends SparkSpec {
     // and the auto decision at test scale is the cache path (tiny input)
     assert(GraphOps.bucketedGraphLayout(edges).isEmpty,
       "a KB-scale edge frame must not trip the 1 GiB bucketed threshold")
+  }
+
+  test("graph layout: bucketed frames built interleaved equal the same frames built alone") {
+    // each bucketed build writes a table of its own: building a second
+    // graph frame before the first runs must not swap or delete the
+    // first one's adjacency (PR and the shared symmetrize both)
+    val e1 = (0L to 40L).flatMap(i => Seq((i, (i + 1) % 41), (i, (i + 5) % 41))).toDF("x", "y")
+    val e2 = (100L to 160L).map(i => (i, 100 + (i * 13) % 61)).toDF("x", "y")
+    def sym(e: DataFrame) = GraphOps.symmetrize(e)
+    def pr(e: DataFrame) = GraphOps.pageRankInt(e, iters = 3)
+    def rows(df: DataFrame) = df.as[(Long, Long)].collect().toSet
+    val prev = sys.props.get("graft.graph.layout")
+    sys.props("graft.graph.layout") = "bucketed"
+    try {
+      val prAlone = Seq(e1, e2).map(e => rows(pr(e)))
+      val symAlone = Seq(e1, e2).map(e => rows(sym(e)))
+      val prBuilt = Seq(pr(e1), pr(e2))
+      val symBuilt = Seq(sym(e1), sym(e2))
+      assert(prBuilt.map(rows) == prAlone)
+      assert(symBuilt.map(rows) == symAlone)
+      assert(prAlone.map(_.size) == Seq(41, 61) && prAlone(0) != prAlone(1))
+    } finally {
+      prev match {
+        case Some(v) => sys.props("graft.graph.layout") = v
+        case None => sys.props.remove("graft.graph.layout")
+      }
+      spark.catalog.clearCache()
+    }
   }
 }

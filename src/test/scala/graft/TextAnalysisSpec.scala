@@ -466,7 +466,6 @@ class TextAnalysisSpec extends SparkSpec {
     }
     // and through the SQL expression path (codegen) on a DataFrame
     import spark.implicits._
-    graft.functions.NativeTextOps.register(spark)
     val got = fixtures.zipWithIndex.map { case (s, i) => (i.toLong, s) }
       .toDF("doc_id", "text")
       .select(col("doc_id"), graft.functions.NativeTextOps.cdcBoundaries(col("text")).as("bs"))

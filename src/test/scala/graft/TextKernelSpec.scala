@@ -18,8 +18,6 @@ import graft.functions.{NativeTextOps, TextKernel, TextOps}
 class TextKernelSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  NativeTextOps.register(spark)
-
   // Deterministic adversarial generator (seeded; no framework needed):
   // compositions of stopword-ish tokens, whitespace runs, punctuation,
   // non-ASCII casing/CJK/supplementary fragments, glued with and without

@@ -25,7 +25,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("native zvalue == per-bit model (codegen path, random inputs)") {
-    NativeVectorOps.register(spark)
     val rng = new scala.util.Random(11)
     val rows = (Seq((0L, 0L), (65535L, 65535L), (1L, 0L), (0L, 1L)) ++
       Seq.fill(2000)((rng.nextLong().abs % 70000, rng.nextLong().abs % 70000)))
